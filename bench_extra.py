@@ -105,24 +105,23 @@ def probe_adc(spark, which):
         _timed(spark, "adc.full",
                lambda: _noop(SIM.pq_adc_topk(codes, cb, q, k=3)))
     if which in ("parts", "all"):
-        # attribute the full-path seconds: query collect, the qdist
-        # dispatch probe, the corpus collect, and the score stage alone
+        # attribute the full-path seconds: the query collect, then the
+        # score stage alone (the same call with the collect served from
+        # the arrays just collected)
         holder = {}
 
         def _qc():
             holder["qids"], holder["Qm"] = SIM._collect_queries(
                 q, "query_id", "embedding")
         _timed(spark, "adc.collect_queries", _qc)
-        _timed(spark, "adc.dispatch_count",
-               lambda: codes.limit(SIM._ADC_QDIST_MAX_CODES + 1).count())
-        _timed(spark, "adc.codes_topandas",
-               lambda: codes.select("vec_id", "codes").toPandas())
-        _timed(spark, "adc.qdist_score", lambda: _noop(
-            SIM._pq_adc_topk_qdist(codes, cb, holder["qids"], holder["Qm"],
-                                   3, "vec_id")))
-        _timed(spark, "adc.qdist_score2", lambda: _noop(
-            SIM._pq_adc_topk_qdist(codes, cb, holder["qids"], holder["Qm"],
-                                   3, "vec_id")))
+        real = SIM._collect_queries
+        SIM._collect_queries = lambda *a: (holder["qids"], holder["Qm"])
+        try:
+            for name in ("adc.score", "adc.score2"):
+                _timed(spark, name, lambda: _noop(
+                    SIM.pq_adc_topk(codes, cb, q, k=3)))
+        finally:
+            SIM._collect_queries = real
     codes.unpersist()
     q.unpersist()
 

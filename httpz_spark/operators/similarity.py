@@ -471,11 +471,12 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
 
     ``approx_cos`` estimates cosine as ``ip(q, x̂) / (|q|·|x̂|)`` where x̂
     is the code's reconstruction; ``|x̂|²`` is the sum of per-subspace
-    centroid norms (subspaces are an orthogonal decomposition).  Lookup
-    tables are built per query on the driver (queries are the bounded
-    broadcast set, as in the other top-k operators) in pure-python float
-    order; executors do m gathers + adds per row — no per-row vector math,
-    no shuffle before the final tiny per-query top-k."""
+    centroid norms (subspaces are an orthogonal decomposition).  The
+    query matrix is broadcast and each Python worker builds the per-query
+    lookup tables once, in a scalar model's float order; executors do m
+    gathers + adds per (row, query) and reduce to a task-local top-k —
+    no per-row vector math, no shuffle before the final tiny per-query
+    top-k (see :func:`pq_adc_topk`)."""
     if codebooks is None:
         codebooks = (train_pq_codebooks(corpus, id_col, vec_col, m, kc)
                      if train else
@@ -486,8 +487,8 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
 
 
 def _adc_normsq(codebooks: list) -> list:
-    """Per-code squared reconstruction norms, pure-python sequential order
-    (shared by the driver and distributed ADC paths)."""
+    """Per-code squared reconstruction norms, pure-python sequential
+    order."""
     sub = len(codebooks[0][0])
     return [
         [sum(c[j] * c[j] for j in range(sub)) for c in book]
@@ -497,30 +498,25 @@ def _adc_normsq(codebooks: list) -> list:
 
 def _np_query_luts(Qm: "np.ndarray", codebooks: list):
     """``(qnorm (q,), ip [m x (q, kc)])`` — the per-query ADC lookup
-    tables, vectorized ACROSS queries but with the exact accumulation
-    order of the pure-python driver path (left-to-right adds per dim, one
-    ``** 0.5``), so both paths are bit-identical.  Runs executor-side in
-    the distributed path."""
+    tables, vectorized ACROSS queries with a scalar model's accumulation
+    order (left-to-right adds per dim, one correctly rounded sqrt), so
+    every cell equals its pure-python ``sum(q_j * c_j)``.  Runs
+    executor-side, once per Python worker (:func:`_cached_query_luts`)."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    if Qm.shape[1] != m * sub:  # trailing-dim truncation must fail loudly
-        raise ValueError(
-            f"query dim {Qm.shape[1]} != m*sub = {m}*{sub} of the codebooks"
-        )
     q = Qm.shape[0]
     qsq = np.zeros(q, dtype=np.float64)
     for j in range(m * sub):
         qsq = qsq + Qm[:, j] * Qm[:, j]
-    qnorm = qsq ** 0.5
+    qnorm = np.sqrt(qsq)
     ip = []
     for mi in range(m):
         kc = len(codebooks[mi])
         # vectorized over BOTH q and kc (sub elementwise passes, not
         # kc*sub) — each (qi, ki) cell still accumulates its sub terms
         # left-to-right on a float64, so bit-equality with the scalar
-        # driver path is preserved while the build drops from O(kc*sub)
-        # numpy dispatches to O(sub) (measured 5.0 -> 0.05 s at Q=10^4,
-        # kc=256 — this runs once per task in the distributed path)
+        # model is preserved while the build drops from O(kc*sub) numpy
+        # dispatches to O(sub) (measured 5.0 -> 0.05 s at Q=10^4, kc=256)
         B = np.asarray(codebooks[mi], dtype=np.float64)  # (kc, sub)
         t = np.zeros((q, kc), dtype=np.float64)
         tmp = np.empty((q, kc), dtype=np.float64)
@@ -529,11 +525,10 @@ def _np_query_luts(Qm: "np.ndarray", codebooks: list):
         # across the sub j-passes: the unblocked form streamed the full
         # (q, kc) buffer through DRAM 3*sub times per subspace (~5 GB at
         # Q=10^4), and with every reused Python worker building its LUT
-        # concurrently the memory bus — not the FLOPs — was the
-        # distributed-ADC stage's bottleneck (measured 472 core-s for a
-        # ~2 core-s-of-arithmetic build+score).  The per-cell
-        # accumulation order is unchanged (left-to-right over j), so
-        # bit-equality with the scalar driver path is preserved.
+        # concurrently the memory bus — not the FLOPs — was the ADC
+        # stage's bottleneck (measured 472 core-s for a ~2 core-s-of-
+        # arithmetic build+score).  The per-cell accumulation order is
+        # unchanged (left-to-right over j).
         blk = max(1, (1 << 17) // max(kc, 1))
         for lo in range(0, q, blk):
             hi = min(lo + blk, q)
@@ -549,84 +544,16 @@ def _np_query_luts(Qm: "np.ndarray", codebooks: list):
 _LUT_CACHE: dict = {}
 _LUT_CACHE_MAX = 2
 
-_LUT_PUB_DIR: list = []          # lazy singleton [tempdir], process-lifetime
-_LUT_PUB: dict = {}              # key -> (qn_path, ip_path), insertion-ordered
-_LUT_PUB_MAX = 2                 # bounded disk: evicted entries are unlinked
 
-
-def _publish_query_luts(sc, Qm: "np.ndarray", codebooks: list):
-    """Local-mode LUT sharing: build the ADC lookup tables ONCE on the
-    driver and publish them as ``.npy`` files every executor worker on
-    this machine mmaps — page-cache-shared, zero per-worker build.  The
-    per-worker build was the distributed-ADC stage's bottleneck AFTER the
-    blocked-build fix: 32 reused workers each re-deriving the same
-    O(m·Q·kc) tables concurrently saturated the memory bus (measured:
-    the full bench ADC query drops 4.5 -> 1.2 s once workers hold the
-    LUT).  Returns ``(key, paths_or_None)``; ``None`` (non-local master,
-    where executors cannot see the driver's filesystem) keeps today's
-    per-worker memoized build — unchanged cluster behavior.  Published
-    files hold the byte-exact :func:`_np_query_luts` output, so the mmap
-    path is bit-identical to the worker-built path.  Disk is bounded at
-    ``_LUT_PUB_MAX`` published queries (older files are unlinked; a
-    late re-execution that misses its files falls back to building)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    key = uuid.uuid4().hex
-    if not sc.master.startswith("local"):
-        return key, None
-    if not _LUT_PUB_DIR:
-        d = tempfile.mkdtemp(prefix="httpz_adc_lut_")
-        _LUT_PUB_DIR.append(d)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    qn, ip = _np_query_luts(Qm, codebooks)
-    qn_path = os.path.join(_LUT_PUB_DIR[0], f"{key}_qn.npy")
-    ip_path = os.path.join(_LUT_PUB_DIR[0], f"{key}_ip.npy")
-    np.save(qn_path, qn)
-    np.save(ip_path, np.stack(ip))  # (m, Q, kc)
-    _LUT_PUB[key] = (qn_path, ip_path)
-    while len(_LUT_PUB) > _LUT_PUB_MAX:
-        old = _LUT_PUB.pop(next(iter(_LUT_PUB)))
-        for p in old:
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-    return key, (qn_path, ip_path)
-
-
-def _cached_query_luts(key: str, Qm: "np.ndarray", codebooks: list,
-                       paths: tuple | None = None):
+def _cached_query_luts(key: str, Qm: "np.ndarray", codebooks: list):
     """Per-worker-process memo of the ADC lookup tables keyed by the
     query's plan-build uuid: Spark reuses Python workers across tasks
     (spark.python.worker.reuse), so a P-partition scan pays the O(Q·kc·m)
-    LUT build once per WORKER instead of once per TASK.  When the driver
-    published the tables (``paths`` — see :func:`_publish_query_luts`)
-    they are READ instead of rebuilt: a sequential load from the page
-    cache (the driver just wrote them) costs ~3x less memory-bus traffic
-    than the 3·sub-pass build, and the expensive derivation runs once
-    per machine instead of once per worker.  (A read-only mmap was
-    measured SLOWER here: the score loop's column gathers fault the
-    whole table in 4 KB pages — ~1.3 s of scattered minor faults across
-    32 workers vs ~0.3 s of bulk copy.)  Any read failure (missing file
-    after eviction, cluster executor on another machine) falls back to
-    building locally.  Bounded at ``_LUT_CACHE_MAX`` entries (the tables
-    are O(m·Q·kc) floats)."""
+    LUT build once per WORKER instead of once per TASK.  Bounded at
+    ``_LUT_CACHE_MAX`` entries (the tables are O(m·Q·kc) floats)."""
     hit = _LUT_CACHE.get(key)
     if hit is None:
-        if paths is not None:
-            try:
-                qn = np.load(paths[0])
-                ips = np.load(paths[1])
-                hit = (qn, [ips[mi] for mi in range(ips.shape[0])])
-            except Exception:
-                hit = None
-        if hit is None:
-            hit = _np_query_luts(Qm, codebooks)
-        _LUT_CACHE[key] = hit
+        hit = _LUT_CACHE[key] = _np_query_luts(Qm, codebooks)
         while len(_LUT_CACHE) > _LUT_CACHE_MAX:
             _LUT_CACHE.pop(next(iter(_LUT_CACHE)))
     return hit
@@ -651,9 +578,8 @@ def _matrix_topk(S: "np.ndarray", ids: "np.ndarray", k: int):
     (score desc, id asc) exactly with :func:`_select_topk` over the
     ~Q*k survivors.  Replaces lexsorting all Q*n triples, which at
     Q=10^4 was one 4M-element 3-key sort PER CHUNK and dominated the
-    distributed-ADC task profile.  NaN scores (zero-norm rows) are
-    excluded from candidacy, matching the old sort order that placed
-    them last."""
+    ADC task profile.  NaN scores (zero-norm rows) are excluded from
+    candidacy, matching the old sort order that placed them last."""
     q, n = S.shape
     if n <= k:
         qrows = np.repeat(np.arange(q, dtype=np.int64), n)
@@ -668,10 +594,8 @@ def _matrix_topk(S: "np.ndarray", ids: "np.ndarray", k: int):
 
 def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str):
     """One Arrow transfer of the query frame -> (ids int64, Qm float64).
-    Both ADC paths start here: the driver path builds python LUTs from
-    it; the distributed path broadcasts the raw matrix (8*Q*d bytes — a
-    10^6 x 64-d query set is ~0.5 GB, the practical ceiling) and builds
-    LUTs executor-side."""
+    The raw matrix is broadcast (8*Q*d bytes — a 10^6 x 64-d query set
+    is ~0.5 GB, the practical ceiling) and LUTs are built executor-side."""
     qpdf = queries.select(query_id_col, vec_col).orderBy(query_id_col).toPandas()
     qids = qpdf[query_id_col].to_numpy(dtype=np.int64)
     Qm = (np.asarray([list(map(float, v)) for v in qpdf[vec_col]],
@@ -680,207 +604,56 @@ def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str):
     return qids, Qm
 
 
+def _check_query_dim(Qm: "np.ndarray", codebooks: list) -> None:
+    """Driver-side, before any scoring job: trailing-dim truncation must
+    fail loudly, never skew approx_cos."""
+    m, sub = len(codebooks), len(codebooks[0][0])
+    if Qm.shape[1] != m * sub:
+        raise ValueError(
+            f"query dim {Qm.shape[1]} != m*sub = {m}*{sub} of the codebooks"
+        )
+
+
+_ADC_SCHEMA = "query_id long, neighbor_id long, approx_cos double"
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Final per-query window over (pre-reduced) ADC candidates: exact
+    (approx_cos desc, neighbor_id asc), null scores last."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("approx_cos").desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def pq_adc_topk(codes: DataFrame, codebooks: list, queries: DataFrame,
                 k: int = 3, id_col: str = "vec_id",
                 vec_col: str = "embedding",
-                query_id_col: str = "query_id",
-                q_max: int = 1024,
-                distributed: bool | None = None) -> DataFrame:
+                query_id_col: str = "query_id") -> DataFrame:
     """ADC scoring over an EXISTING codes frame — the query-time half of
     :func:`pq_ann_topk`, usable directly against a persisted index
     (:mod:`httpz_spark.operators.simindex`): the corpus embeddings are
     never touched, only the m-small-ints codes.
 
-    Two bit-identical execution paths, switched on ``q_max``:
+    The codes are scanned where they sit, at any N and any Q: the raw
+    query matrix rides a torrent broadcast, each Python worker builds the
+    LUTs once (:func:`_cached_query_luts`), scores chunk-wise with a
+    (Q x chunk) gather+add matrix, and each task pre-reduces to its local
+    exact top-k per query, so the shuffle into the final window is
+    O(tasks * Q * k), never Q * N.  An empty query set returns an empty
+    frame without a scoring job."""
+    import uuid
 
-    * **driver path** (Q <= q_max, the FAISS few-queries/huge-corpus
-      shape): LUTs built on the driver in pure-python float order and
-      shipped in the task closure; executors do m gathers + adds per
-      (row, query).
-    * **distributed path** (Q > q_max, corpus-vs-corpus retrieval): the
-      raw query matrix is broadcast (torrent, not closure), LUTs are
-      built ONCE PER TASK inside the Arrow stage with numpy
-      (:func:`_np_query_luts` — same accumulation order, bit-equal), the
-      (q x batch) score matrix is computed chunk-wise with zero per-query
-      python loops, and each task pre-reduces to its LOCAL top-k per
-      query (exact, (score desc, id asc)) so the shuffle into the final
-      window is P*Q*k rows instead of Q*N.
-
-    ``distributed=None`` picks by comparing Q to ``q_max``; pass
-    True/False to force a path."""
-    qids, Qm = _collect_queries(queries, query_id_col, vec_col)
-    if distributed is None:
-        distributed = len(qids) > q_max
-    if distributed and len(qids):
-        return _pq_adc_topk_dist(codes, codebooks, qids, Qm, k, id_col)
-    return _pq_adc_topk_driver(codes, codebooks, qids, Qm, k, id_col)
-
-
-def _pq_adc_topk_driver(codes: DataFrame, codebooks: list,
-                        qids: "np.ndarray", Qm: "np.ndarray", k: int,
-                        id_col: str) -> DataFrame:
     import pandas as pd
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    normsq = _adc_normsq(codebooks)
-    luts = []  # (query_id, qnorm, ip[mi][ki])
-    for qi in range(len(qids)):
-        qv = [float(x) for x in Qm[qi]]
-        if len(qv) != m * sub:  # trailing-dim truncation must fail loudly
-            raise ValueError(
-                f"query dim {len(qv)} != m*sub = {m}*{sub} of the codebooks"
-            )
-        qnorm = 0.0
-        for x in qv:
-            qnorm += x * x
-        qnorm = qnorm ** 0.5
-        ip = [
-            [sum(qv[mi * sub + j] * c[j] for j in range(sub))
-             for c in codebooks[mi]]
-            for mi in range(m)
-        ]
-        luts.append((int(qids[qi]), qnorm, ip))
-
-    def score(batches):
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        np_luts = [(qid, qn, [np.asarray(t, dtype=np.float64) for t in ip])
-                   for qid, qn, ip in luts]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
-            ids = pdf[id_col].to_numpy()
-            nsum = np_normsq[0][C[:, 0]]
-            for mi in range(1, m):
-                nsum = nsum + np_normsq[mi][C[:, mi]]
-            rnorm = np.sqrt(nsum)
-            out_q, out_id, out_s = [], [], []
-            for qid, qn, ip in np_luts:
-                s = ip[0][C[:, 0]]
-                for mi in range(1, m):
-                    s = s + ip[mi][C[:, mi]]
-                s = s / (qn * rnorm)
-                out_q.append(np.full(len(ids), qid, dtype=np.int64))
-                out_id.append(ids)
-                out_s.append(s)
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_id),
-                "approx_cos": np.concatenate(out_s),
-            })
-
-    scored = codes.mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-_ADC_QDIST_MAX_CODES = 1 << 16
-
-
-def _pq_adc_topk_qdist(codes: DataFrame, codebooks: list,
-                       qids: "np.ndarray", Qm: "np.ndarray", k: int,
-                       id_col: str) -> DataFrame:
-    """Query-distributed ADC for the many-queries / small-corpus shape
-    (Q > q_max but the codes frame fits comfortably on every executor —
-    corpus-vs-corpus retrieval against a compact index).  The
-    codes-distributed path replicates the full O(m·Q·kc) LUT into every
-    worker (~165 MB at Q=10^4, kc=256 — measured as the stage's entire
-    bottleneck when N is small: scoring is Q·N·m gathers, a fraction of
-    the LUT bytes).  Here the DISTRIBUTION AXIS flips: tasks own disjoint
-    query slices, each builds only its slice of the LUT
-    (:func:`_np_query_luts` rows are per-query independent, so slices
-    are bit-identical to the full build), and the tiny (id, codes)
-    matrix rides the broadcast instead.  Total LUT work across the stage
-    is exactly ONE build, perfectly parallel, zero replication — and
-    each query is fully scored in one task, so the pre-reduced exact
-    top-k needs no cross-task merge beyond the same final window."""
-    import pandas as pd
-
-    m = len(codebooks)
-    normsq = _adc_normsq(codebooks)
     spark = codes.sparkSession
-    sc = spark.sparkContext
-    cpdf = codes.select(id_col, "codes").toPandas()  # bounded by dispatch
-    ids_all = cpdf[id_col].to_numpy(dtype=np.int64)
-    C_all = (np.asarray([list(c) for c in cpdf["codes"]], dtype=np.int64)
-             if len(cpdf) else np.zeros((0, m), dtype=np.int64))
-    bcorpus = sc.broadcast((ids_all, C_all))
-    bq = sc.broadcast((qids, Qm))
-    Q = len(qids)
-    # ~256 queries per slice floor keeps per-task numpy batches vectorized;
-    # cap at defaultParallelism so one wave of tasks covers the stage
-    n_slices = max(1, min(sc.defaultParallelism, (Q + 255) // 256))
-
-    def score(batches):
-        b_qids, b_Qm = bq.value
-        b_ids, b_C = bcorpus.value
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        n = len(b_ids)
-        for pdf in batches:
-            for s in pdf["id"]:
-                lo, hi = s * Q // n_slices, (s + 1) * Q // n_slices
-                if lo >= hi or n == 0:
-                    continue
-                qn, ip = _np_query_luts(b_Qm[lo:hi], codebooks)
-                nsum = np_normsq[0][b_C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_normsq[mi][b_C[:, mi]]
-                rnorm = np.sqrt(nsum)
-                chunk = max(1, (1 << 22) // max(hi - lo, 1))
-                acc = []
-                for clo in range(0, n, chunk):
-                    chi = min(clo + chunk, n)
-                    S = ip[0][:, b_C[clo:chi, 0]]
-                    for mi in range(1, m):
-                        S = S + ip[mi][:, b_C[clo:chi, mi]]
-                    S = S / (qn[:, None] * rnorm[None, clo:chi])
-                    acc.append(_matrix_topk(S, b_ids[clo:chi], k))
-                qr = np.concatenate([a[0] for a in acc])
-                iD = np.concatenate([a[1] for a in acc])
-                sc_ = np.concatenate([a[2] for a in acc])
-                qr, iD, sc_ = _select_topk(qr, iD, sc_, k)
-                yield pd.DataFrame({
-                    "query_id": b_qids[lo + qr],
-                    "neighbor_id": iD,
-                    "approx_cos": sc_,
-                })
-
-    scored = spark.range(0, n_slices, 1, n_slices).mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _pq_adc_topk_dist(codes: DataFrame, codebooks: list,
-                      qids: "np.ndarray", Qm: "np.ndarray", k: int,
-                      id_col: str) -> DataFrame:
-    """Distributed ADC: the raw query matrix rides a torrent broadcast,
-    each task builds the LUTs ONCE with :func:`_np_query_luts` (bit-equal
-    to the driver path), scores chunk-wise with a (Q x chunk) gather+add
-    matrix, and pre-reduces to its local exact top-k per query so the
-    shuffle into the final window is O(tasks * Q * k), never Q * N.
-
-    Dispatch: a corpus small enough to broadcast
-    (``_ADC_QDIST_MAX_CODES``, probed with an early-abort limit-count)
-    flips the distribution axis to :func:`_pq_adc_topk_qdist` — when N
-    is small the per-worker LUT replication, not scoring, is the entire
-    stage cost."""
-    import pandas as pd
-
-    if (codes.limit(_ADC_QDIST_MAX_CODES + 1).count()
-            <= _ADC_QDIST_MAX_CODES):
-        return _pq_adc_topk_qdist(codes, codebooks, qids, Qm, k, id_col)
+    qids, Qm = _collect_queries(queries, query_id_col, vec_col)
+    if not len(qids):
+        return _rank_topk(spark.createDataFrame([], _ADC_SCHEMA), k)
+    _check_query_dim(Qm, codebooks)
     m = len(codebooks)
     normsq = _adc_normsq(codebooks)
-    sc = codes.sparkSession.sparkContext
+    sc = spark.sparkContext
     # Scale-adaptive parallelism: a small/compacted codes frame (one
     # parquet file, a fresh encode of a small corpus) arrives with fewer
     # partitions than the session has cores, and the WHOLE Q x N scoring
@@ -888,19 +661,18 @@ def _pq_adc_topk_dist(codes: DataFrame, codebooks: list,
     # shape -> single-task scoring, 14+ s).  The scoring work is pure
     # compute, so spread it; at production scale codes already carries
     # >= defaultParallelism partitions and this is a no-op.
-    nparts = codes.rdd.getNumPartitions()
-    if nparts < sc.defaultParallelism:
+    if codes.rdd.getNumPartitions() < sc.defaultParallelism:
         codes = codes.repartition(sc.defaultParallelism)
     bq = sc.broadcast((qids, Qm))
-    lut_key, lut_paths = _publish_query_luts(sc, Qm, codebooks)
+    lut_key = uuid.uuid4().hex
 
     def score(batches):
         b_qids, b_Qm = bq.value
-        qn, ip = _cached_query_luts(lut_key, b_Qm, codebooks, lut_paths)
+        qn, ip = _cached_query_luts(lut_key, b_Qm, codebooks)
         np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
         Q = len(b_qids)
         # chunk the corpus so the (Q x chunk) score matrix stays ~32 MB
-        chunk = max(1, (1 << 22) // max(Q, 1))
+        chunk = max(1, (1 << 22) // Q)
         acc = []  # [(qrow, id, score)] arrays, task-local top-k accumulator
         acc_len = 0
 
@@ -938,13 +710,7 @@ def _pq_adc_topk_dist(codes: DataFrame, codebooks: list,
                 "approx_cos": sc_,
             })
 
-    scored = codes.mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(codes.mapInPandas(score, schema=_ADC_SCHEMA), k)
 
 
 def _seq_dot(a, b) -> float:
@@ -952,12 +718,6 @@ def _seq_dot(a, b) -> float:
     for x, y in zip(a, b):
         acc += float(x) * float(y)
     return acc
-
-
-def _seq_cos(a, b) -> float:
-    import math
-
-    return _seq_dot(a, b) / (math.sqrt(_seq_dot(a, a)) * math.sqrt(_seq_dot(b, b)))
 
 
 def _np_assign_cells(X: "np.ndarray", centroids: list) -> "np.ndarray":
@@ -1074,9 +834,7 @@ def ivfpq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
                    codebooks: list | None = None, train: bool = False,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    query_id_col: str = "query_id",
-                   residual: bool = False,
-                   q_max: int = 1024,
-                   distributed: bool | None = None) -> DataFrame:
+                   residual: bool = False) -> DataFrame:
     """FAISS-IVFPQ composition: the coarse quantizer prunes the corpus to
     each query's ``nprobe`` nearest cells, and ADC over PQ codes scores
     ONLY those candidates — the two approximations multiply, and so do the
@@ -1087,9 +845,9 @@ def ivfpq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     shuffle) + PQ encode (numpy batch, no shuffle) -> equi-join with the
     broadcast (query_id, cell) probe pairs -> per-row LUT scoring keyed by
     query_id -> tiny per-query top-k window.  The probe ranking runs on
-    the driver in sequential pure-python float order (queries are the
-    bounded broadcast set), keeping the whole operator bit-reproducible by
-    an independent scalar reimplementation."""
+    the driver, vectorized in sequential scalar float order, keeping the
+    whole operator bit-reproducible by an independent scalar
+    reimplementation."""
     if centroids is None:
         centroids = (train_centroids(corpus, n_centroids, id_col, vec_col)
                      if train else
@@ -1109,14 +867,13 @@ def ivfpq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     indexed = ivfpq_encode(corpus, centroids, codebooks, residual,
                            id_col, vec_col)
     return ivfpq_adc_topk(indexed, centroids, codebooks, queries, k, nprobe,
-                          id_col, vec_col, query_id_col, residual=residual,
-                          q_max=q_max, distributed=distributed)
+                          id_col, vec_col, query_id_col, residual=residual)
 
 
 def _np_query_cent_dots(Qm: "np.ndarray", centroids: list) -> "np.ndarray":
     """``(Q, n_centroids)`` inner products, vectorized ACROSS queries but
-    accumulating per dim left-to-right — bit-identical to the driver
-    path's ``_seq_dot(qv, c)`` per query.  Shared by probe ranking and
+    accumulating per dim left-to-right — bit-identical to a scalar
+    ``_seq_dot(qv, c)`` per query.  Shared by probe ranking and
     the residual ``<q, centroid>`` score term."""
     Q, d = Qm.shape
     dots = np.empty((Q, len(centroids)), dtype=np.float64)
@@ -1131,8 +888,9 @@ def _np_query_cent_dots(Qm: "np.ndarray", centroids: list) -> "np.ndarray":
 def _np_probe_cells(Qm: "np.ndarray", centroids: list, nprobe: int) -> "np.ndarray":
     """(Q, nprobe) nearest-centroid indices by cosine, ties -> lower index.
     Vectorized ACROSS queries with the per-dim left-to-right accumulation
-    order of the pure-python ``_seq_cos`` driver path, so the rankings are
-    bit-identical; stable argsort reproduces ``sorted((-cos, i))``."""
+    order of a scalar ``dot(q, c) / (sqrt(dot(q, q)) * sqrt(dot(c, c)))``,
+    so the rankings are bit-identical to it; stable argsort reproduces
+    ``sorted((-cos, i))``."""
     import math
 
     Q, d = Qm.shape
@@ -1153,9 +911,7 @@ def ivfpq_adc_topk(indexed: DataFrame, centroids: list, codebooks: list,
                    queries: DataFrame, k: int = 3, nprobe: int = 4,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    query_id_col: str = "query_id",
-                   residual: bool = False,
-                   q_max: int = 1024,
-                   distributed: bool | None = None) -> DataFrame:
+                   residual: bool = False) -> DataFrame:
     """Query-time half of :func:`ivfpq_ann_topk` over an EXISTING
     ``(id, cell, codes)`` frame — usable directly against a persisted
     index (:mod:`httpz_spark.operators.simindex`); the corpus embeddings
@@ -1168,31 +924,85 @@ def ivfpq_adc_topk(indexed: DataFrame, centroids: list, codebooks: list,
     cross term into one precomputed ``(n_centroids x m x kc)`` table —
     O(tables) driver/closure cost, still zero embedding reads.
 
-    Same two bit-identical paths as :func:`pq_adc_topk`, switched on
-    ``q_max``: the driver path builds per-query LUTs in pure-python float
-    order and ships them in the closure (right at FAISS's
-    few-queries/huge-corpus shape); the distributed path broadcasts the
-    raw query matrix, ranks probe cells with :func:`_np_probe_cells`
-    (vectorized, bit-equal), and builds LUTs once per task inside the
-    Arrow stage, scoring candidates by a vectorized ``(qidx, code)``
-    gather — no per-query python loop anywhere, so 10^5+ query sets
-    (corpus-vs-corpus retrieval) neither sit on the driver nor bloat the
-    task closure."""
+    Probe ranking is one vectorized numpy pass on the driver
+    (:func:`_np_probe_cells` — Q x n_centroids x d flops), the query
+    matrix rides a torrent broadcast, each Python worker builds the LUTs
+    once (:func:`_cached_query_luts`), and candidates are scored by a
+    vectorized ``(query_row, code)`` gather keyed by searchsorted query
+    ids — no per-query python loop anywhere, so 10^5+ query sets neither
+    sit on the driver nor bloat the task closure.  An empty query set
+    returns an empty frame without a scoring job."""
+    import uuid
+
+    import pandas as pd
+
+    spark = indexed.sparkSession
     qids, Qm = _collect_queries(queries, query_id_col, vec_col)
-    if distributed is None:
-        distributed = len(qids) > q_max
-    if distributed and len(qids):
-        return _ivfpq_adc_topk_dist(indexed, centroids, codebooks, qids, Qm,
-                                    k, nprobe, id_col, residual)
-    return _ivfpq_adc_topk_driver(indexed, centroids, codebooks, qids, Qm,
-                                  k, nprobe, id_col, residual)
+    if not len(qids):
+        return _rank_topk(spark.createDataFrame([], _ADC_SCHEMA), k)
+    _check_query_dim(Qm, codebooks)
+    m = len(codebooks)
+    normsq = _adc_normsq(codebooks)
+    cell_tabs = (_residual_cell_tables(centroids, codebooks, normsq)
+                 if residual else None)
+    cells = _np_probe_cells(Qm, centroids, nprobe)
+    probe_pairs = [(int(qids[qi]), int(c))
+                   for qi in range(len(qids)) for c in cells[qi]]
+    probe_df = F.broadcast(
+        spark.createDataFrame(probe_pairs, "query_id long, cell int")
+    )
+    cand = indexed.join(probe_df, "cell")
+    bq = spark.sparkContext.broadcast((qids, Qm))
+    lut_key = uuid.uuid4().hex
+
+    def score(batches):
+        b_qids, b_Qm = bq.value
+        qn, ip = _cached_query_luts(lut_key, b_Qm, codebooks)
+        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
+        if residual:
+            np_cnormsq = np.asarray(cell_tabs[0], dtype=np.float64)
+            np_combo = [np.asarray(t, dtype=np.float64) for t in cell_tabs[1]]
+            qc = _np_query_cent_dots(b_Qm, centroids)  # (Q, ncell)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
+            rq = pdf["query_id"].to_numpy(dtype=np.int64)
+            qidx = np.searchsorted(b_qids, rq)
+            if residual:
+                # |x̂|² = |c|² + Σ_mi (2⟨c_mi, r̂_mi⟩ + |r̂_mi|²), per (cell, code)
+                cells_arr = pdf["cell"].to_numpy(dtype=np.int64)
+                nsum = np_cnormsq[cells_arr] + np_combo[0][cells_arr, C[:, 0]]
+                for mi in range(1, m):
+                    nsum = nsum + np_combo[mi][cells_arr, C[:, mi]]
+            else:
+                nsum = np_normsq[0][C[:, 0]]
+                for mi in range(1, m):
+                    nsum = nsum + np_normsq[mi][C[:, mi]]
+            rnorm = np.sqrt(nsum)
+            if residual:
+                # ⟨q, x̂⟩ = ⟨q, c⟩ + Σ_mi ⟨q_mi, r̂_mi⟩
+                s = qc[qidx, cells_arr] + ip[0][qidx, C[:, 0]]
+            else:
+                s = ip[0][qidx, C[:, 0]]
+            for mi in range(1, m):
+                s = s + ip[mi][qidx, C[:, mi]]
+            out = s / (qn[qidx] * rnorm)
+            yield pd.DataFrame({
+                "query_id": rq,
+                "neighbor_id": pdf[id_col].to_numpy(),
+                "approx_cos": out,
+            })
+
+    sel = ["query_id", F.col(id_col), "codes"] + (["cell"] if residual else [])
+    return _rank_topk(cand.select(*sel).mapInPandas(score, schema=_ADC_SCHEMA),
+                      k)
 
 
 def _residual_cell_tables(centroids: list, codebooks: list, normsq: list):
     """``(cnormsq[cell], combo[mi][cell][ki])`` where combo folds the
     reconstruction cross term: ``2·⟨c_mi, r̂_mi⟩ + |r̂_mi|²``.  Pure-python
-    scalar accumulation (left-to-right per dim), shared verbatim by the
-    driver and distributed residual paths."""
+    scalar accumulation (left-to-right per dim)."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
     cnormsq = [_seq_dot(c, c) for c in centroids]
@@ -1209,182 +1019,3 @@ def _residual_cell_tables(centroids: list, codebooks: list, normsq: list):
             t.append(row)
         combo.append(t)
     return cnormsq, combo
-
-
-def _ivfpq_adc_topk_driver(indexed: DataFrame, centroids: list,
-                           codebooks: list, qids: "np.ndarray",
-                           Qm: "np.ndarray", k: int, nprobe: int,
-                           id_col: str, residual: bool = False) -> DataFrame:
-    import pandas as pd
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-
-    normsq = _adc_normsq(codebooks)
-    cell_tabs = (_residual_cell_tables(centroids, codebooks, normsq)
-                 if residual else None)
-    probe_pairs = []
-    luts = {}
-    for qi in range(len(qids)):
-        qid = int(qids[qi])
-        qv = [float(x) for x in Qm[qi]]
-        if len(qv) != m * sub:  # trailing-dim truncation must fail loudly
-            raise ValueError(
-                f"query dim {len(qv)} != m*sub = {m}*{sub} of the codebooks"
-            )
-        coss = [_seq_cos(qv, c) for c in centroids]
-        probed = [i for _, i in sorted((-c, i) for i, c in enumerate(coss))[:nprobe]]
-        probe_pairs.extend((qid, int(cell)) for cell in probed)
-        qn = 0.0
-        for x in qv:
-            qn += x * x
-        qn = qn ** 0.5
-        ip = [
-            [sum(qv[mi * sub + j] * c[j] for j in range(sub))
-             for c in codebooks[mi]]
-            for mi in range(m)
-        ]
-        qc = [_seq_dot(qv, c) for c in centroids] if residual else None
-        luts[qid] = (qn, ip, qc)
-
-    spark = indexed.sparkSession
-    probe_df = F.broadcast(
-        spark.createDataFrame(probe_pairs, "query_id long, cell int")
-    )
-    cand = indexed.join(probe_df, "cell")
-
-    def score(batches):
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        if residual:
-            np_cnormsq = np.asarray(cell_tabs[0], dtype=np.float64)
-            np_combo = [np.asarray(t, dtype=np.float64) for t in cell_tabs[1]]
-        np_luts = {
-            qid: (qn,
-                  [np.asarray(t, dtype=np.float64) for t in ip],
-                  np.asarray(qc, dtype=np.float64) if qc is not None else None)
-            for qid, (qn, ip, qc) in luts.items()
-        }
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
-            qids = pdf["query_id"].to_numpy()
-            if residual:
-                # |x̂|² = |c|² + Σ_mi (2⟨c_mi, r̂_mi⟩ + |r̂_mi|²), per (cell, code)
-                cells_arr = pdf["cell"].to_numpy(dtype=np.int64)
-                nsum = np_cnormsq[cells_arr] + np_combo[0][cells_arr, C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_combo[mi][cells_arr, C[:, mi]]
-            else:
-                nsum = np_normsq[0][C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_normsq[mi][C[:, mi]]
-            rnorm = np.sqrt(nsum)
-            out = np.empty(len(C), dtype=np.float64)
-            for qid in np.unique(qids):
-                mask = qids == qid
-                qn, ip, qc = np_luts[int(qid)]
-                if residual:
-                    # ⟨q, x̂⟩ = ⟨q, c⟩ + Σ_mi ⟨q_mi, r̂_mi⟩
-                    s = qc[cells_arr[mask]] + ip[0][C[mask, 0]]
-                else:
-                    s = ip[0][C[mask, 0]]
-                for mi in range(1, m):
-                    s = s + ip[mi][C[mask, mi]]
-                out[mask] = s / (qn * rnorm[mask])
-            yield pd.DataFrame({
-                "query_id": qids,
-                "neighbor_id": pdf[id_col].to_numpy(),
-                "approx_cos": out,
-            })
-
-    sel = ["query_id", F.col(id_col), "codes"] + (["cell"] if residual else [])
-    scored = cand.select(*sel).mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _ivfpq_adc_topk_dist(indexed: DataFrame, centroids: list,
-                         codebooks: list, qids: "np.ndarray",
-                         Qm: "np.ndarray", k: int, nprobe: int,
-                         id_col: str, residual: bool = False) -> DataFrame:
-    """Distributed IVFPQ ADC: probe ranking is one vectorized numpy pass
-    on the driver (cheap — Q x n_centroids x d flops, no python loops),
-    the query matrix rides a torrent broadcast, and each task builds the
-    LUTs once with :func:`_np_query_luts`; candidate scoring is a fully
-    vectorized ``(query_row, code)`` fancy gather keyed by searchsorted
-    query ids — bit-identical to the driver path's per-qid masked loop.
-    ``residual=True`` adds the per-(query, cell) ``⟨q, c⟩`` gather and the
-    precomputed cell/combo tables, in the driver path's accumulation
-    order."""
-    import pandas as pd
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    if Qm.shape[1] != m * sub:  # trailing-dim truncation must fail loudly
-        raise ValueError(
-            f"query dim {Qm.shape[1]} != m*sub = {m}*{sub} of the codebooks"
-        )
-    normsq = _adc_normsq(codebooks)
-    cell_tabs = (_residual_cell_tables(centroids, codebooks, normsq)
-                 if residual else None)
-    cells = _np_probe_cells(Qm, centroids, nprobe)
-    probe_pairs = [(int(qids[qi]), int(c))
-                   for qi in range(len(qids)) for c in cells[qi]]
-    spark = indexed.sparkSession
-    probe_df = F.broadcast(
-        spark.createDataFrame(probe_pairs, "query_id long, cell int")
-    )
-    cand = indexed.join(probe_df, "cell")
-    bq = spark.sparkContext.broadcast((qids, Qm))
-    lut_key, lut_paths = _publish_query_luts(spark.sparkContext, Qm, codebooks)
-
-    def score(batches):
-        b_qids, b_Qm = bq.value
-        qn, ip = _cached_query_luts(lut_key, b_Qm, codebooks, lut_paths)
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        if residual:
-            np_cnormsq = np.asarray(cell_tabs[0], dtype=np.float64)
-            np_combo = [np.asarray(t, dtype=np.float64) for t in cell_tabs[1]]
-            qc = _np_query_cent_dots(b_Qm, centroids)  # (Q, ncell)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
-            rq = pdf["query_id"].to_numpy(dtype=np.int64)
-            qidx = np.searchsorted(b_qids, rq)
-            if residual:
-                cells_arr = pdf["cell"].to_numpy(dtype=np.int64)
-                nsum = np_cnormsq[cells_arr] + np_combo[0][cells_arr, C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_combo[mi][cells_arr, C[:, mi]]
-            else:
-                nsum = np_normsq[0][C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_normsq[mi][C[:, mi]]
-            rnorm = np.sqrt(nsum)
-            if residual:
-                s = qc[qidx, cells_arr] + ip[0][qidx, C[:, 0]]
-            else:
-                s = ip[0][qidx, C[:, 0]]
-            for mi in range(1, m):
-                s = s + ip[mi][qidx, C[:, mi]]
-            out = s / (qn[qidx] * rnorm)
-            yield pd.DataFrame({
-                "query_id": rq,
-                "neighbor_id": pdf[id_col].to_numpy(),
-                "approx_cos": out,
-            })
-
-    sel = ["query_id", F.col(id_col), "codes"] + (["cell"] if residual else [])
-    scored = cand.select(*sel).mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -1,9 +1,9 @@
-"""Distributed ADC query path (pq_adc_topk / ivfpq_adc_topk, Q > q_max).
+"""ADC query path (pq_adc_topk / ivfpq_adc_topk).
 
-The contract: the broadcast-LUT executor-side path is BIT-IDENTICAL to the
-driver-LUT path on every (query_id, rank, neighbor_id, approx_cos) cell —
-same float accumulation order, same tie rules — so flipping ``q_max`` (or
-forcing ``distributed=``) can never change results, only the plan.
+The contract: every (query_id, rank, neighbor_id, approx_cos) cell is
+BIT-IDENTICAL to an independent pure-python ADC top-k written here — same
+left-to-right float accumulation, a correctly rounded sqrt, ties broken
+by neighbor id, null (zero-norm) scores last — at any query count.
 """
 
 import math
@@ -35,104 +35,7 @@ def _cells(df):
     )
 
 
-def test_np_query_luts_bit_equal_to_driver_luts(spark, emb):
-    """The vectorized LUT builder reproduces the pure-python one bit for
-    bit (same left-to-right per-dim adds, one sqrt)."""
-    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
-    qpdf = (
-        emb.filter(F.col("vec_id") < 16)
-        .orderBy("vec_id").select("embedding").toPandas()
-    )
-    Qm = np.asarray([list(map(float, v)) for v in qpdf["embedding"]],
-                    dtype=np.float64)
-    qnorm, ip = SIM._np_query_luts(Qm, cb)
-    m, sub = len(cb), len(cb[0][0])
-    for qi in range(len(Qm)):
-        qv = [float(x) for x in Qm[qi]]
-        qn = 0.0
-        for x in qv:
-            qn += x * x
-        qn = qn ** 0.5
-        assert qnorm[qi] == qn  # bit equality, not approx
-        for mi in range(m):
-            for ki, c in enumerate(cb[mi]):
-                ref = sum(qv[mi * sub + j] * c[j] for j in range(sub))
-                assert ip[mi][qi, ki] == ref
-
-
-def test_select_topk_matches_brute_force():
-    rng = np.random.Generator(np.random.PCG64(7))
-    qrows = rng.integers(0, 5, size=400)
-    ids = rng.integers(0, 50, size=400)
-    scores = rng.choice(np.linspace(-1, 1, 21), size=400)  # force ties
-    qr, iD, sc = SIM._select_topk(qrows, ids, scores.astype(np.float64), 3)
-    got = sorted(zip(qr.tolist(), iD.tolist(), sc.tolist()))
-    want = []
-    for q in np.unique(qrows):
-        cand = sorted(
-            [(-scores[i], ids[i]) for i in range(400) if qrows[i] == q]
-        )[:3]
-        want.extend((int(q), int(i), float(-s)) for s, i in cand)
-    assert got == sorted(want)
-
-
-def test_pq_adc_distributed_bit_equal(spark, emb):
-    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
-    codes = SIM.pq_encode(emb, cb)
-    q = _queries(emb)
-    drv = SIM.pq_adc_topk(codes, cb, q, k=3, distributed=False)
-    dst = SIM.pq_adc_topk(codes, cb, q, k=3, distributed=True)
-    assert _cells(drv) == _cells(dst)
-
-
-def test_pq_adc_distributed_bit_equal_small_chunks(spark, emb):
-    """Exercise the chunked (Q x chunk) scoring + the task-local top-k
-    compaction by shrinking the chunk budget below the batch size."""
-    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
-    codes = SIM.pq_encode(emb.limit(300), cb)
-    # 64 queries drives chunk = 2^22 // 64 = 65536 > n, so repartition to
-    # many tiny batches instead to force the accumulator to compact
-    q = _queries(emb, 64)
-    drv = SIM.pq_adc_topk(codes.repartition(16), cb, q, k=2,
-                          distributed=False)
-    dst = SIM.pq_adc_topk(codes.repartition(16), cb, q, k=2,
-                          distributed=True)
-    assert _cells(drv) == _cells(dst)
-
-
-def test_ivfpq_adc_distributed_bit_equal(spark, emb):
-    cents = SIM._centroid_arrays(emb, "vec_id", "embedding", 16)
-    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
-    cells = SIM.ivf_assign(emb.select("vec_id", "embedding"), cents)
-    codes = SIM.pq_encode(emb, cb)
-    indexed = cells.select("vec_id", "cell").join(codes, "vec_id")
-    q = _queries(emb)
-    drv = SIM.ivfpq_adc_topk(indexed, cents, cb, q, k=3, nprobe=4,
-                             distributed=False)
-    dst = SIM.ivfpq_adc_topk(indexed, cents, cb, q, k=3, nprobe=4,
-                             distributed=True)
-    assert _cells(drv) == _cells(dst)
-
-
-def test_np_probe_cells_matches_seq_cos_ranking(spark, emb):
-    """Probe-cell ranking: vectorized argsort(-cos, stable) == the driver
-    path's sorted((-_seq_cos, i)) for every query."""
-    cents = SIM._centroid_arrays(emb, "vec_id", "embedding", 16)
-    qpdf = _queries(emb, 32).orderBy("query_id").select("embedding").toPandas()
-    Qm = np.asarray([list(map(float, v)) for v in qpdf["embedding"]],
-                    dtype=np.float64)
-    got = SIM._np_probe_cells(Qm, cents, 4)
-    for qi in range(len(Qm)):
-        qv = [float(x) for x in Qm[qi]]
-        coss = [SIM._seq_cos(qv, c) for c in cents]
-        want = [i for _, i in sorted((-c, i) for i, c in enumerate(coss))[:4]]
-        assert got[qi].tolist() == want
-
-
-
-# -- scalar reference: every ADC path against a pure-python model ----------
-
-_PQ_M, _PQ_SUB, _PQ_KC = 4, 2, 6
+# -- scalar reference: a pure-python ADC top-k -----------------------------
 
 
 def _scalar_topk(scored, k):
@@ -153,12 +56,14 @@ def _scalar_dot(a, b):
 
 
 def _scalar_luts(qv, cb):
-    qn = 0.0
-    for x in qv:
-        qn += x * x
-    ip = [[sum(qv[mi * _PQ_SUB + j] * c[j] for j in range(_PQ_SUB))
-           for c in cb[mi]] for mi in range(_PQ_M)]
-    return math.sqrt(qn), ip
+    m, sub = len(cb), len(cb[0][0])
+    ip = [[sum(qv[mi * sub + j] * c[j] for j in range(sub))
+           for c in cb[mi]] for mi in range(m)]
+    return math.sqrt(_scalar_dot(qv, qv)), ip
+
+
+def _scalar_normsq(cb):
+    return [[sum(x * x for x in c) for c in book] for book in cb]
 
 
 def _scalar_score(s, qn, nsum):
@@ -167,15 +72,15 @@ def _scalar_score(s, qn, nsum):
 
 
 def _scalar_pq_adc(rows, cb, queries, k):
-    normsq = [[sum(c[j] * c[j] for j in range(_PQ_SUB)) for c in book]
-              for book in cb]
+    """rows: [(vec_id, codes)], queries: [(query_id, vector)]."""
+    normsq = _scalar_normsq(cb)
     scored = {}
     for qid, qv in queries:
         qn, ip = _scalar_luts(qv, cb)
         cands = scored[qid] = []
         for vid, code in rows:
             s, nsum = ip[0][code[0]], normsq[0][code[0]]
-            for mi in range(1, _PQ_M):
+            for mi in range(1, len(cb)):
                 s += ip[mi][code[mi]]
                 nsum += normsq[mi][code[mi]]
             cands.append((vid, _scalar_score(s, qn, nsum)))
@@ -183,8 +88,9 @@ def _scalar_pq_adc(rows, cb, queries, k):
 
 
 def _scalar_ivfpq_adc(rows, cents, cb, queries, k, nprobe, residual):
-    normsq = [[sum(c[j] * c[j] for j in range(_PQ_SUB)) for c in book]
-              for book in cb]
+    """rows: [(vec_id, cell, codes)], queries: [(query_id, vector)]."""
+    m, sub = len(cb), len(cb[0][0])
+    normsq = _scalar_normsq(cb)
     scored = {}
     for qid, qv in queries:
         qn, ip = _scalar_luts(qv, cb)
@@ -200,16 +106,16 @@ def _scalar_ivfpq_adc(rows, cents, cb, queries, k, nprobe, residual):
             c = cents[cell]
             if residual:  # x̂ = centroid + r̂
                 s, nsum = qc[cell] + ip[0][code[0]], _scalar_dot(c, c)
-                for mi in range(_PQ_M):
+                for mi in range(m):
                     cross = 0.0
-                    for j in range(_PQ_SUB):
-                        cross += 2.0 * c[mi * _PQ_SUB + j] * cb[mi][code[mi]][j]
+                    for j in range(sub):
+                        cross += 2.0 * c[mi * sub + j] * cb[mi][code[mi]][j]
                     nsum += cross + normsq[mi][code[mi]]
             else:
                 s, nsum = ip[0][code[0]], normsq[0][code[0]]
-                for mi in range(1, _PQ_M):
+                for mi in range(1, m):
                     nsum += normsq[mi][code[mi]]
-            for mi in range(1, _PQ_M):
+            for mi in range(1, m):
                 s += ip[mi][code[mi]]
             cands.append((vid, _scalar_score(s, qn, nsum)))
     return _scalar_topk(scored, k)
@@ -221,115 +127,152 @@ def _bits(cells):
             for q, r, i, s in cells]
 
 
-@pytest.fixture(scope="module")
-def adc_world(spark):
-    """Codebooks with an all-zero codeword in every subspace (so the
-    all-zero code reconstructs to 0 and scores null), codes with
-    duplicated rows under new ids (tied scores), and query sets on both
-    sides of 1,024 with repeated vectors (tied queries)."""
-    rng = np.random.Generator(np.random.PCG64(11))
-    d = _PQ_M * _PQ_SUB
-    cb = [[[0.0] * _PQ_SUB] + [list(map(float, rng.standard_normal(_PQ_SUB)))
-                               for _ in range(_PQ_KC - 1)]
-          for _ in range(_PQ_M)]
-    cents = [list(map(float, rng.standard_normal(d))) for _ in range(5)]
-    base = [[int(x) for x in rng.integers(0, _PQ_KC, _PQ_M)] for _ in range(50)]
-    codes = base + base[:20] + [[0] * _PQ_M] * 2
-    rows = [(100 + 7 * i, int(rng.integers(0, len(cents))), c)
-            for i, c in enumerate(codes)]
-    vecs = [list(map(float, rng.standard_normal(d))) for _ in range(1000)]
-    qsets = {name: [(5 * i + 1, vecs[i % 1000]) for i in range(n)]
-             for name, n in (("q40", 40), ("q1030", 1030))}
-    ivf = spark.createDataFrame(
-        rows, "vec_id long, cell int, codes array<int>").persist()
-    return {"cb": cb, "cents": cents, "rows": rows, "qsets": qsets,
-            "codes": ivf.select("vec_id", "codes"), "ivf": ivf}
+def _qrows(q):
+    return [(r["query_id"], list(map(float, r["embedding"])))
+            for r in q.collect()]
 
 
-def _qframe(spark, qs):
-    return spark.createDataFrame(qs, "query_id long, embedding array<double>")
+def _ref_pq(codes, cb, q, k):
+    rows = [(r["vec_id"], list(r["codes"])) for r in codes.collect()]
+    return _bits(_scalar_pq_adc(rows, cb, _qrows(q), k))
 
 
-# The driver-LUT paths take |q| with python's ``x ** 0.5`` (libm pow,
-# not correctly rounded); the numpy paths and the reference use a
-# correctly rounded sqrt.  Two of the 1,000 query vectors land 1 ULP
-# apart, and only the 1,030-query set contains them.
-_POW_ULP = pytest.mark.xfail(
-    strict=True, reason="driver path: x ** 0.5 is 1 ULP off sqrt for 2 queries")
-
-
-@pytest.mark.parametrize("qset,path", [
-    ("q40", "auto"), ("q40", "driver"), ("q40", "qdist"), ("q40", "cdist"),
-    ("q1030", "auto"), pytest.param("q1030", "driver", marks=_POW_ULP),
-    ("q1030", "qdist"), ("q1030", "cdist"),
-])
-def test_pq_adc_paths_match_scalar_reference(spark, adc_world, qset, path,
-                                             monkeypatch):
-    w = adc_world
-    # a zero query scores null against every code
-    qs = w["qsets"][qset] + [(10**6, [0.0] * (_PQ_M * _PQ_SUB))]
-    want = _bits(_scalar_pq_adc([(v, c) for v, _, c in w["rows"]], w["cb"],
-                                qs, 4))
-    assert any(s is None for *_, s in want)
-    if path == "cdist":
-        monkeypatch.setattr(SIM, "_ADC_QDIST_MAX_CODES", 0)
-    dist = {"auto": None, "driver": False}.get(path, True)
-    got = SIM.pq_adc_topk(w["codes"], w["cb"], _qframe(spark, qs), k=4,
-                          distributed=dist)
-    assert _bits(_cells(got)) == want
-
-
-@pytest.mark.parametrize("residual", [False, True])
-@pytest.mark.parametrize("qset,path", [
-    ("q40", "auto"), ("q40", "driver"), ("q40", "dist"),
-    ("q1030", "auto"), pytest.param("q1030", "driver", marks=_POW_ULP),
-    ("q1030", "dist"),
-])
-def test_ivfpq_adc_paths_match_scalar_reference(spark, adc_world, qset, path,
-                                                residual):
-    w = adc_world
-    qs = w["qsets"][qset]
-    want = _bits(_scalar_ivfpq_adc(w["rows"], w["cents"], w["cb"], qs, 4, 2,
+def _ref_ivfpq(indexed, cents, cb, q, k, nprobe, residual=False):
+    rows = [(r["vec_id"], r["cell"], list(r["codes"]))
+            for r in indexed.collect()]
+    return _bits(_scalar_ivfpq_adc(rows, cents, cb, _qrows(q), k, nprobe,
                                    residual))
-    dist = {"auto": None, "driver": False, "dist": True}[path]
-    got = SIM.ivfpq_adc_topk(w["ivf"], w["cents"], w["cb"], _qframe(spark, qs),
-                             k=4, nprobe=2, residual=residual,
-                             distributed=dist)
+
+
+def _assert_ref(got, want):
     assert _bits(_cells(got)) == want
 
-def test_q_max_auto_switch(spark, emb, monkeypatch):
-    """distributed=None flips to the broadcast path exactly when
-    Q > q_max — and the switch is output-invisible."""
+
+def test_np_query_luts_bit_equal_to_driver_luts(spark, emb):
+    """The vectorized LUT builder reproduces the pure-python one bit for
+    bit (same left-to-right per-dim adds, one correctly rounded sqrt)."""
     cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
-    codes = SIM.pq_encode(emb.limit(200), cb)
-    calls = []
-    real = SIM._pq_adc_topk_dist
+    qpdf = (
+        emb.filter(F.col("vec_id") < 16)
+        .orderBy("vec_id").select("embedding").toPandas()
+    )
+    Qm = np.asarray([list(map(float, v)) for v in qpdf["embedding"]],
+                    dtype=np.float64)
+    qnorm, ip = SIM._np_query_luts(Qm, cb)
+    for qi in range(len(Qm)):
+        qn, ref = _scalar_luts([float(x) for x in Qm[qi]], cb)
+        assert qnorm[qi] == qn  # bit equality, not approx
+        for mi in range(len(cb)):
+            assert ip[mi][qi].tolist() == ref[mi]
 
-    def spy(*a, **kw):
-        calls.append(1)
-        return real(*a, **kw)
 
-    monkeypatch.setattr(SIM, "_pq_adc_topk_dist", spy)
-    q = _queries(emb, 8)
-    base = _cells(SIM.pq_adc_topk(codes, cb, q, k=2, q_max=16))
-    assert not calls  # 8 <= 16: driver path
-    auto = _cells(SIM.pq_adc_topk(codes, cb, q, k=2, q_max=4))
-    assert calls  # 8 > 4: distributed path
-    assert base == auto
+def test_select_topk_matches_brute_force():
+    rng = np.random.Generator(np.random.PCG64(7))
+    qrows = rng.integers(0, 5, size=400)
+    ids = rng.integers(0, 50, size=400)
+    scores = rng.choice(np.linspace(-1, 1, 21), size=400)  # force ties
+    qr, iD, sc = SIM._select_topk(qrows, ids, scores.astype(np.float64), 3)
+    got = sorted(zip(qr.tolist(), iD.tolist(), sc.tolist()))
+    want = []
+    for q in np.unique(qrows):
+        cand = sorted(
+            [(-scores[i], ids[i]) for i in range(400) if qrows[i] == q]
+        )[:3]
+        want.extend((int(q), int(i), float(-s)) for s, i in cand)
+    assert got == sorted(want)
+
+
+def test_pq_adc_distributed_bit_equal(spark, emb):
+    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
+    for codes, q in ((SIM.pq_encode(emb, cb), _queries(emb)),
+                     (SIM.pq_encode(emb.limit(400), cb), _queries(emb, 48))):
+        _assert_ref(SIM.pq_adc_topk(codes, cb, q, k=3),
+                    _ref_pq(codes, cb, q, 3))
+
+
+def test_pq_adc_distributed_bit_equal_small_chunks(spark, emb):
+    """Exercise the task-local top-k compaction over many tiny batches."""
+    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
+    codes = SIM.pq_encode(emb.limit(300), cb)
+    q = _queries(emb, 64)
+    _assert_ref(SIM.pq_adc_topk(codes.repartition(16), cb, q, k=2),
+                _ref_pq(codes, cb, q, 2))
+
+
+def test_ivfpq_adc_distributed_bit_equal(spark, emb):
+    cents = SIM._centroid_arrays(emb, "vec_id", "embedding", 16)
+    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
+    cells = SIM.ivf_assign(emb.select("vec_id", "embedding"), cents)
+    codes = SIM.pq_encode(emb, cb)
+    indexed = cells.select("vec_id", "cell").join(codes, "vec_id")
+    q = _queries(emb)
+    _assert_ref(SIM.ivfpq_adc_topk(indexed, cents, cb, q, k=3, nprobe=4),
+                _ref_ivfpq(indexed, cents, cb, q, 3, 4))
+
+
+def test_np_probe_cells_matches_seq_cos_ranking(spark, emb):
+    """Probe-cell ranking: vectorized argsort(-cos, stable) == a scalar
+    sorted((-cos, i)) for every query."""
+    cents = SIM._centroid_arrays(emb, "vec_id", "embedding", 16)
+    qpdf = _queries(emb, 32).orderBy("query_id").select("embedding").toPandas()
+    Qm = np.asarray([list(map(float, v)) for v in qpdf["embedding"]],
+                    dtype=np.float64)
+    got = SIM._np_probe_cells(Qm, cents, 4)
+    for qi in range(len(Qm)):
+        qv = [float(x) for x in Qm[qi]]
+        coss = [_scalar_dot(qv, c) / (math.sqrt(_scalar_dot(qv, qv))
+                                      * math.sqrt(_scalar_dot(c, c)))
+                for c in cents]
+        want = [i for _, i in sorted((-c, i) for i, c in enumerate(coss))[:4]]
+        assert got[qi].tolist() == want
 
 
 def test_index_topk_passthrough(spark, emb, tmp_path):
-    """PQIndex/IVFPQIndex.topk forward the path switch; persisted-index
-    queries are identical on both paths."""
+    """PQIndex/IVFPQIndex.topk score the persisted codes exactly like the
+    scalar reference over the same rows."""
     q = _queries(emb, 6)
     pq = PQIndex.build(spark, str(tmp_path / "pq"), emb.limit(400),
                        m=8, kc=16, train=False)
-    assert _cells(pq.topk(q, k=3, distributed=False)) == \
-        _cells(pq.topk(q, k=3, distributed=True))
+    _assert_ref(pq.topk(q, k=3), _ref_pq(pq.codes(), pq.codebooks, q, 3))
     ivf = IVFPQIndex.build(spark, str(tmp_path / "ivfpq"), emb.limit(400),
                            n_centroids=8, m=8, kc=16)
-    assert _cells(ivf.topk(q, k=3, nprobe=3, distributed=False)) == \
-        _cells(ivf.topk(q, k=3, nprobe=3, distributed=True))
+    _assert_ref(ivf.topk(q, k=3, nprobe=3),
+                _ref_ivfpq(ivf.rows(), ivf.centroids, ivf.codebooks, q, 3, 3))
+
+
+def test_adc_empty_queries_return_empty_frame(spark, emb):
+    """Zero queries: an empty frame with the usual schema, for both
+    operators (no scoring job, no concatenate-of-nothing crash)."""
+    cents = SIM._centroid_arrays(emb, "vec_id", "embedding", 8)
+    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
+    codes = SIM.pq_encode(emb.limit(100), cb)
+    indexed = SIM.ivfpq_encode(emb.limit(100), cents, cb)
+    none = spark.createDataFrame([], "query_id long, embedding array<float>")
+    want = SIM.pq_adc_topk(codes, cb, _queries(emb, 2), k=3).dtypes
+    assert want == [("query_id", "bigint"), ("neighbor_id", "bigint"),
+                    ("approx_cos", "double"), ("rank", "int")]
+    for got in (SIM.pq_adc_topk(codes, cb, none, k=3),
+                SIM.ivfpq_adc_topk(indexed, cents, cb, none, k=3, nprobe=2)):
+        assert got.dtypes == want
+        assert got.collect() == []
+
+
+def test_adc_query_dim_mismatch_raises_on_driver(spark, emb):
+    """A query whose dim is not m*sub fails with ValueError at call time,
+    before any scoring job — also above 1,024 queries."""
+    cents = SIM._centroid_arrays(emb, "vec_id", "embedding", 8)
+    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
+    codes = SIM.pq_encode(emb.limit(100), cb)
+    indexed = SIM.ivfpq_encode(emb.limit(100), cents, cb)
+    d = len(cb) * len(cb[0][0])
+    for n in (8, 1100):
+        short = spark.range(n).select(
+            F.col("id").alias("query_id"),
+            F.array_repeat(F.lit(0.5), d - 1).alias("embedding"))
+        with pytest.raises(ValueError, match="query dim"):
+            SIM.pq_adc_topk(codes, cb, short, k=3)
+        with pytest.raises(ValueError, match="query dim"):
+            SIM.ivfpq_adc_topk(indexed, cents, cb, short, k=3, nprobe=2)
 
 
 # -- residual IVFPQ (FAISS rule: quantize v - centroid[cell]) ---------------
@@ -365,7 +308,7 @@ def test_ivfpq_residual_scores_match_reconstruction(spark, emb):
     indexed = SIM.ivfpq_encode(emb.limit(200), cents, cb, residual=True)
     q = _queries(emb, 4)
     got = SIM.ivfpq_adc_topk(indexed, cents, cb, q, k=5, nprobe=3,
-                             residual=True, distributed=False)
+                             residual=True)
     code_by_id = {r["vec_id"]: (r["cell"], list(r["codes"]))
                   for r in indexed.collect()}
     qv_by_id = {r["query_id"]: np.asarray(list(map(float, r["embedding"])))
@@ -386,11 +329,9 @@ def test_ivfpq_residual_bit_equal_paths(spark, emb):
     cb = SIM.train_residual_pq_codebooks(emb, cents, m=8, kc=16)
     indexed = SIM.ivfpq_encode(emb, cents, cb, residual=True)
     q = _queries(emb)
-    drv = SIM.ivfpq_adc_topk(indexed, cents, cb, q, k=3, nprobe=4,
-                             residual=True, distributed=False)
-    dst = SIM.ivfpq_adc_topk(indexed, cents, cb, q, k=3, nprobe=4,
-                             residual=True, distributed=True)
-    assert _cells(drv) == _cells(dst)
+    _assert_ref(SIM.ivfpq_adc_topk(indexed, cents, cb, q, k=3, nprobe=4,
+                                   residual=True),
+                _ref_ivfpq(indexed, cents, cb, q, 3, 4, residual=True))
 
 
 def test_ivfpq_residual_recall_beats_raw(spark, emb):
@@ -418,61 +359,74 @@ def test_ivfpq_residual_recall_beats_raw(spark, emb):
 
 def test_ivfpq_index_residual_persist_roundtrip(spark, emb, tmp_path):
     """residual flag persists in the meta file; a reopened index scores
-    identically (both execution paths)."""
+    identically, and both match the scalar residual reference."""
     q = _queries(emb, 6)
     built = IVFPQIndex.build(spark, str(tmp_path / "r"), emb.limit(400),
                              n_centroids=8, m=8, kc=16, residual=True)
     assert built.residual
     reopened = IVFPQIndex.open(spark, str(tmp_path / "r"))
     assert reopened.residual
-    base = _cells(built.topk(q, k=3, nprobe=3, distributed=False))
-    assert _cells(reopened.topk(q, k=3, nprobe=3, distributed=False)) == base
-    assert _cells(reopened.topk(q, k=3, nprobe=3, distributed=True)) == base
+    want = _ref_ivfpq(built.rows(), built.centroids, built.codebooks, q, 3, 3,
+                      residual=True)
+    _assert_ref(built.topk(q, k=3, nprobe=3), want)
+    _assert_ref(reopened.topk(q, k=3, nprobe=3), want)
 
 
-def test_published_luts_mmap_bit_equal_and_fallback(spark, emb):
-    """The driver-published mmap LUTs hold the byte-exact
-    _np_query_luts output (so the shared-file path cannot diverge from
-    the per-worker build), and _cached_query_luts falls back to building
-    when the files are gone (eviction / cluster executor)."""
-    import numpy as np
+# -- property test on synthetic codes: ties, zero vectors, Q over 1,024 ----
 
-    from httpz_spark.operators import similarity as S
-
-    rng = np.random.default_rng(7)
-    Qm = rng.standard_normal((50, 64))
-    cb = [[list(rng.standard_normal(8)) for _ in range(16)] for _ in range(8)]
-    key, paths = S._publish_query_luts(spark.sparkContext, Qm, cb)
-    assert paths is not None  # local master publishes
-    qn_ref, ip_ref = S._np_query_luts(Qm, cb)
-    qn_mm, ip_mm = S._cached_query_luts(key, Qm, cb, paths)
-    assert np.array_equal(np.asarray(qn_mm), qn_ref)
-    for a, b in zip(ip_mm, ip_ref):
-        assert np.array_equal(np.asarray(a), b)
-    # publish-eviction bound: pushing more queries unlinks the oldest files
-    import os
-
-    for _ in range(S._LUT_PUB_MAX + 1):
-        S._publish_query_luts(spark.sparkContext, Qm, cb)
-    assert not os.path.exists(paths[0]) and not os.path.exists(paths[1])
-    # a worker that misses its files (key2 not in its memo) must rebuild
-    S._LUT_CACHE.clear()
-    qn_fb, ip_fb = S._cached_query_luts(key, Qm, cb, paths)
-    assert np.array_equal(np.asarray(qn_fb), qn_ref)
-    for a, b in zip(ip_fb, ip_ref):
-        assert np.array_equal(np.asarray(a), b)
+_PQ_M, _PQ_SUB, _PQ_KC = 4, 2, 6
 
 
-def test_pq_adc_three_paths_identical(spark, emb, monkeypatch):
-    """driver == codes-distributed == query-distributed on the same
-    input.  The qdist small-corpus dispatch would normally swallow every
-    test-sized corpus, so the codes-distributed path is pinned by
-    forcing the dispatch threshold to zero."""
-    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
-    codes = SIM.pq_encode(emb.limit(400), cb)
-    q = _queries(emb, 48)
-    drv = _cells(SIM.pq_adc_topk(codes, cb, q, k=3, distributed=False))
-    qdist = _cells(SIM.pq_adc_topk(codes, cb, q, k=3, distributed=True))
-    monkeypatch.setattr(SIM, "_ADC_QDIST_MAX_CODES", 0)
-    cdist = _cells(SIM.pq_adc_topk(codes, cb, q, k=3, distributed=True))
-    assert drv == qdist == cdist
+@pytest.fixture(scope="module")
+def adc_world(spark):
+    """Codebooks with an all-zero codeword in every subspace (so the
+    all-zero code reconstructs to 0 and scores null), codes with
+    duplicated rows under new ids (tied scores), and query sets on both
+    sides of 1,024 with repeated vectors (tied queries)."""
+    rng = np.random.Generator(np.random.PCG64(11))
+    d = _PQ_M * _PQ_SUB
+    cb = [[[0.0] * _PQ_SUB] + [list(map(float, rng.standard_normal(_PQ_SUB)))
+                               for _ in range(_PQ_KC - 1)]
+          for _ in range(_PQ_M)]
+    cents = [list(map(float, rng.standard_normal(d))) for _ in range(5)]
+    base = [[int(x) for x in rng.integers(0, _PQ_KC, _PQ_M)] for _ in range(50)]
+    codes = base + base[:20] + [[0] * _PQ_M] * 2
+    rows = [(100 + 7 * i, int(rng.integers(0, len(cents))), c)
+            for i, c in enumerate(codes)]
+    vecs = [list(map(float, rng.standard_normal(d))) for _ in range(1000)]
+    qsets = {name: [(5 * i + 1, vecs[i % 1000]) for i in range(n)]
+             for name, n in (("q40", 40), ("q1030", 1030))}
+    ivf = spark.createDataFrame(
+        rows, "vec_id long, cell int, codes array<int>").persist()
+    return {"cb": cb, "cents": cents, "rows": rows, "qsets": qsets,
+            "codes": ivf.select("vec_id", "codes"), "ivf": ivf}
+
+
+def _qframe(spark, qs):
+    return spark.createDataFrame(qs, "query_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("qset", ["q40", "q1030"])
+def test_pq_adc_paths_match_scalar_reference(spark, adc_world, qset):
+    w = adc_world
+    # a zero query scores null against every code
+    qs = w["qsets"][qset] + [(10**6, [0.0] * (_PQ_M * _PQ_SUB))]
+    want = _bits(_scalar_pq_adc([(v, c) for v, _, c in w["rows"]], w["cb"],
+                                qs, 4))
+    assert any(s is None for *_, s in want)
+    _assert_ref(SIM.pq_adc_topk(w["codes"], w["cb"], _qframe(spark, qs), k=4),
+                want)
+
+
+@pytest.mark.parametrize("residual", [False, True])
+@pytest.mark.parametrize("qset", ["q40", "q1030"])
+def test_ivfpq_adc_paths_match_scalar_reference(spark, adc_world, qset,
+                                                residual):
+    w = adc_world
+    qs = w["qsets"][qset]
+    want = _bits(_scalar_ivfpq_adc(w["rows"], w["cents"], w["cb"], qs, 4, 2,
+                                   residual))
+    _assert_ref(SIM.ivfpq_adc_topk(w["ivf"], w["cents"], w["cb"],
+                                   _qframe(spark, qs), k=4, nprobe=2,
+                                   residual=residual),
+                want)
