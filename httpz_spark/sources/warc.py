@@ -146,6 +146,26 @@ def write_warc(df: DataFrame, path: str, n_files: int = 8,
                          ext=ext, record=record)
 
 
+def _file_route(n_files: int, col: str = "warc_file"):
+    """LongType repartition key that hash-partitions file ``part-<i>``
+    to partition ``i`` exactly, for ``i < n_files``: the file index goes
+    through :func:`hash_partition_remap`, which solves for Spark's
+    ``hashLong`` — so the looked-up value must be a long (an int literal
+    would be hashed with ``hashInt`` and scatter the files).  A name
+    with no trailing digits, or an index at or beyond ``n_files``,
+    falls back to hashing the name itself: file content is placement-
+    independent (equal keys stay co-located, the per-file byte layout
+    comes from the total sort order), so that is still correct, just
+    hash-balanced."""
+    remap = hash_partition_remap(n_files)
+    digits = F.regexp_extract(F.col(col), "([0-9]+)$", 1)
+    idx = digits.cast("long")
+    idx = F.when((digits != "") & (idx < n_files), idx).otherwise(
+        F.pmod(F.xxhash64(F.col(col)), F.lit(n_files)))
+    return F.element_at(F.array(*[F.lit(int(v)) for v in remap]),
+                        (idx + 1).cast("int")).cast("long")
+
+
 def write_records(rec: DataFrame, path: str, n_files: int,
                   compress: bool, ext: str,
                   record=None) -> DataFrame:
@@ -180,22 +200,11 @@ def write_records(rec: DataFrame, path: str, n_files: int,
     # file index (the digits warc_file_assign puts in the name) is
     # remapped through a driver-solved murmur-inverse table so a plain
     # hash repartition sends file i to partition i exactly: one-task-per
-    # -file balance, ZERO extra jobs.  File CONTENT is placement-
-    # independent (equal keys stay co-located and the per-file byte
-    # layout comes from the total sort order), so a non-standard
-    # warc_file name — no trailing digits, an index beyond n_files —
-    # falls back to hashing the name itself: still correct, just
-    # hash-balanced.  Beyond _REMAP_MAX files the literal lookup array
-    # stops being a sane expression and range partitioning returns.
+    # -file balance, ZERO extra jobs (see :func:`_file_route`).
+    # Beyond _REMAP_MAX files the literal lookup array stops being a
+    # sane expression and range partitioning returns.
     if n_files <= _REMAP_MAX:
-        remap = hash_partition_remap(n_files)
-        idx = F.regexp_extract(F.col("warc_file"), "([0-9]+)$", 1)
-        idx = F.when(idx != "", idx.cast("long")).otherwise(
-            F.pmod(F.xxhash64(F.col("warc_file")), F.lit(n_files)))
-        route = F.element_at(
-            F.array(*[F.lit(int(v)) for v in remap]),
-            (F.pmod(idx, F.lit(n_files)) + 1).cast("int"))
-        rec = rec.repartition(n_files, route.alias("_route"))
+        rec = rec.repartition(n_files, _file_route(n_files).alias("_route"))
     else:
         rec = rec.repartitionByRange(n_files, "warc_file")
     rec = rec.sortWithinPartitions("warc_file", "surt", "url", "date",

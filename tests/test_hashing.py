@@ -89,40 +89,43 @@ def test_murmur3_32_hashlong_matches_spark_hash(spark):
         assert murmur3_32_hashlong(r["v"]) == r["h"], r["v"]
 
 
-def test_hash_partition_remap_routes_exactly(spark):
-    # remap[i] hash-partitions to partition i for every i — the
-    # one-task-per-file writer layout with no range-sampling job
-    from pyspark.sql import functions as F
-
-    from httpz_spark.functions.hashing import (hash_partition_remap,
-                                               murmur3_32_hashlong)
-
-    for n in (1, 2, 7, 64):
-        remap = hash_partition_remap(n)
-        assert len(set(remap)) == n
-        for i, v in enumerate(remap):
-            h = murmur3_32_hashlong(v)
-            assert ((h % n) + n) % n == i
-    n = 16
-    remap = hash_partition_remap(n)
-    df = spark.createDataFrame([(i, remap[i]) for i in range(n)],
-                               "i long, route long")
-    out = df.repartition(n, "route").select(
-        "i", F.spark_partition_id().alias("p")).collect()
-    assert all(r["i"] == r["p"] for r in out)
-
-
 def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
-    # the direct-routed writer must still produce n_files files with the
-    # standard names and exactly one file's rows per task (no 1/e-empty
-    # hash skew, no range-sampling double evaluation)
+    # the writer's own route expression sends file part-<i> to partition
+    # i exactly (one task per file, no 1/e-empty hash skew, no range-
+    # sampling job); an index at or beyond n_files falls back to hashing
+    # the name
     import os
 
     from pyspark.sql import functions as F
 
-    from httpz_spark.sources.warc import write_warc
+    from httpz_spark.functions.hashing import (hash_partition_remap,
+                                               murmur3_32_hashlong)
+    from httpz_spark.sources.warc import _file_route, write_warc
 
-    n, n_files = 4000, 16
+    for n in (1, 2, 7, 64):
+        remap = hash_partition_remap(n)
+        assert [((murmur3_32_hashlong(v) % n) + n) % n for v in remap] == \
+            list(range(n))
+    for n_files in (16, 64):
+        names = [f"part-{i:05d}" for i in range(n_files)]
+        df = spark.createDataFrame([(i, nm) for i, nm in enumerate(names)],
+                                   "i long, warc_file string")
+        out = df.repartition(n_files, _file_route(n_files)).select(
+            "i", F.spark_partition_id().alias("p")).collect()
+        assert sorted((r["i"], r["p"]) for r in out) == \
+            [(i, i) for i in range(n_files)]
+    n_files = 16
+    odd = spark.createDataFrame(
+        [("part-00016",), ("part-99999",), ("nodigits",)], "warc_file string")
+    want = {r["warc_file"]: r["p"] for r in odd.select(
+        "warc_file",
+        F.pmod(F.xxhash64("warc_file"), F.lit(n_files)).alias("p")).collect()}
+    got = {r["warc_file"]: r["p"] for r in odd.repartition(
+        n_files, _file_route(n_files)).select(
+        "warc_file", F.spark_partition_id().alias("p")).collect()}
+    assert got == want
+
+    n = 4000
     src = spark.range(n).select(
         F.concat(F.lit("https://h"), (F.col("id") % 97).cast("string"),
                  F.lit(".example/p/"), F.col("id").cast("string")).alias("url"),
@@ -135,9 +138,5 @@ def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
     cdx = write_warc(src, out, n_files=n_files).persist()
     assert cdx.count() == n
     files = sorted(f for f in os.listdir(out) if f.endswith(".warc.gz"))
-    assert len(files) == n_files
-    # every row of one warc_file came from one task: per-file distinct
-    # partition count is 1 (spark_partition_id is gone by CDX time, so
-    # assert via the layout instead: filenames are the full 0..n-1 set)
     assert files == [f"part-{i:05d}.warc.gz" for i in range(n_files)]
     cdx.unpersist()
