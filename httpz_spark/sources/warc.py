@@ -146,22 +146,22 @@ def write_warc(df: DataFrame, path: str, n_files: int = 8,
                          ext=ext, record=record)
 
 
-def _file_route(n_files: int, col: str = "warc_file"):
-    """LongType repartition key that hash-partitions file ``part-<i>``
-    to partition ``i`` exactly, for ``i < n_files``: the file index goes
-    through :func:`hash_partition_remap`, which solves for Spark's
-    ``hashLong`` — so the looked-up value must be a long (an int literal
-    would be hashed with ``hashInt`` and scatter the files).  A name
-    with no trailing digits, or an index at or beyond ``n_files``,
-    falls back to hashing the name itself: file content is placement-
-    independent (equal keys stay co-located, the per-file byte layout
-    comes from the total sort order), so that is still correct, just
-    hash-balanced."""
+def _file_route(n_files: int):
+    """LongType repartition key that hash-partitions the ``warc_file``
+    named ``part-<i>`` to partition ``i`` exactly, for ``i < n_files``:
+    the file index goes through :func:`hash_partition_remap`, which
+    solves for Spark's ``hashLong`` — so the looked-up value must be a
+    long (an int literal would be hashed with ``hashInt`` and scatter
+    the files).  A name with no trailing digits, or an index at or
+    beyond ``n_files``, falls back to hashing the name itself: file
+    content is placement-independent (equal keys stay co-located, the
+    per-file byte layout comes from the total sort order), so that is
+    still correct, just hash-balanced."""
     remap = hash_partition_remap(n_files)
-    digits = F.regexp_extract(F.col(col), "([0-9]+)$", 1)
+    digits = F.regexp_extract(F.col("warc_file"), "([0-9]+)$", 1)
     idx = digits.cast("long")
     idx = F.when((digits != "") & (idx < n_files), idx).otherwise(
-        F.pmod(F.xxhash64(F.col(col)), F.lit(n_files)))
+        F.pmod(F.xxhash64(F.col("warc_file")), F.lit(n_files)))
     return F.element_at(F.array(*[F.lit(int(v)) for v in remap]),
                         (idx + 1).cast("int")).cast("long")
 
