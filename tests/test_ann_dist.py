@@ -184,10 +184,22 @@ def test_select_topk_matches_brute_force():
 
 def test_pq_adc_distributed_bit_equal(spark, emb):
     cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
-    for codes, q in ((SIM.pq_encode(emb, cb), _queries(emb)),
-                     (SIM.pq_encode(emb.limit(400), cb), _queries(emb, 48))):
-        _assert_ref(SIM.pq_adc_topk(codes, cb, q, k=3),
-                    _ref_pq(codes, cb, q, 3))
+    codes = SIM.pq_encode(emb, cb)
+    q = _queries(emb)
+    _assert_ref(SIM.pq_adc_topk(codes, cb, q, k=3), _ref_pq(codes, cb, q, 3))
+
+
+def test_pq_adc_three_paths_identical(spark, emb):
+    """The same codes laid out three ways (as encoded, 16 partitions, one
+    partition) score to identical cells, each bit-equal to the scalar
+    reference: the task-local top-k does not depend on the layout."""
+    cb = SIM.pq_codebooks_fixed(emb, m=8, kc=16)
+    codes = SIM.pq_encode(emb.limit(400), cb).cache()
+    q = _queries(emb, 48)
+    want = _ref_pq(codes, cb, q, 3)
+    for layout in (codes, codes.repartition(16), codes.coalesce(1)):
+        _assert_ref(SIM.pq_adc_topk(layout, cb, q, k=3), want)
+    codes.unpersist()
 
 
 def test_pq_adc_distributed_bit_equal_small_chunks(spark, emb):

@@ -89,6 +89,29 @@ def test_murmur3_32_hashlong_matches_spark_hash(spark):
         assert murmur3_32_hashlong(r["v"]) == r["h"], r["v"]
 
 
+def test_hash_partition_remap_routes_exactly(spark):
+    # remap[i] hash-partitions to partition i for every i when hashed as
+    # a long — the one-task-per-file writer layout with no range-sampling
+    # job
+    from pyspark.sql import functions as F
+
+    from httpz_spark.functions.hashing import (hash_partition_remap,
+                                               murmur3_32_hashlong)
+
+    for n in (1, 2, 7, 64):
+        remap = hash_partition_remap(n)
+        assert len(set(remap)) == n
+        assert [((murmur3_32_hashlong(v) % n) + n) % n for v in remap] == \
+            list(range(n))
+    n = 16
+    remap = hash_partition_remap(n)
+    df = spark.createDataFrame([(i, remap[i]) for i in range(n)],
+                               "i long, route long")
+    out = df.repartition(n, "route").select(
+        "i", F.spark_partition_id().alias("p")).collect()
+    assert all(r["i"] == r["p"] for r in out)
+
+
 def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
     # the writer's own route expression sends file part-<i> to partition
     # i exactly (one task per file, no 1/e-empty hash skew, no range-
@@ -98,14 +121,8 @@ def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from httpz_spark.functions.hashing import (hash_partition_remap,
-                                               murmur3_32_hashlong)
     from httpz_spark.sources.warc import _file_route, write_warc
 
-    for n in (1, 2, 7, 64):
-        remap = hash_partition_remap(n)
-        assert [((murmur3_32_hashlong(v) % n) + n) % n for v in remap] == \
-            list(range(n))
     for n_files in (16, 64):
         names = [f"part-{i:05d}" for i in range(n_files)]
         df = spark.createDataFrame([(i, nm) for i, nm in enumerate(names)],
